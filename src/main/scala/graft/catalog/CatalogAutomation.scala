@@ -50,164 +50,6 @@ final class CatalogAutomation(spark: SparkSession, profile: CatalogProfile) {
   def tableExists(db: String, table: String): Boolean =
     spark.catalog.tableExists(s"${quotedDb(db)}.${DdlGenerator.quoteIdent(table)}")
 
-  /** Small-file compaction for a file-backed table — the maintenance pass
-    * every `foreachBatch`-appended store needs: each micro-batch append
-    * writes its own file set, so a long-running stream degrades a
-    * bucketed store into thousands of tiny files (listing cost, scan
-    * task explosion — the #1 operational failure of file-backed stores).
-    * Rewrites the table's data as one file per bucket (bucketed tables;
-    * `repartition` on the bucket columns uses the same murmur3-pmod
-    * hash as the bucketed writer, so each task holds exactly one
-    * bucket's rows) or ⌈bytes / targetFileBytes⌉ coalesced files
-    * (unbucketed), PRESERVING the catalog layout: same schema, provider,
-    * bucket/sort spec, and location — a probe planned over the compacted
-    * table is the same plan, answers byte-identical (asserted in
-    * CompactionSuite).
-    *
-    * `keepOnly` lets the store owner drop rows that are invisible anyway
-    * — e.g. [[graft.operators.IngestLedger]] orphans from failed ingest
-    * attempts (`led.committedOnly(s, _)`) — making compaction double as
-    * the orphan-reclaim pass the ledger protocol defers to maintenance.
-    *
-    * Mechanics: stage the rewritten files next to the table's location
-    * (full write completes before anything is dropped), then swap —
-    * drop + filesystem rename + re-register at the original location
-    * with the original CLUSTERED BY spec. The swap window is not
-    * transactional (that is what a snapshot-based table format buys; no
-    * such runtime is available offline) — run it when no writer holds
-    * the table, as every maintenance rewrite here assumes. Idempotent:
-    * re-running converges to the same file count and identical answers;
-    * a crashed run's staging directory is reclaimed by the next run.
-    * Partitioned tables are out of scope (the stores are unpartitioned).
-    */
-  def compactTable(db: String, table: String,
-      keepOnly: DataFrame => DataFrame = identity,
-      targetFileBytes: Long = 128L << 20,
-      stagingReclaimTtlMs: Long = 24L * 3600 * 1000): CompactionResult = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.graftbridge.GraftPlanBridge
-    val meta = GraftPlanBridge.tableMetadata(spark, db, table)
-    require(meta.partitionColumnNames.isEmpty,
-      s"compactTable supports unpartitioned tables only: $db.$table")
-    val fqn = s"${DdlGenerator.quoteIdent(db)}.${DdlGenerator.quoteIdent(table)}"
-    val loc = new Path(meta.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(loc)) Seq.empty
-      else fs.listStatus(loc).toSeq.filter(f => f.isFile &&
-        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-    val before = dataFiles()
-    val bytes = before.map(_.getLen).sum
-    val df = keepOnly(spark.table(fqn))
-    val provider = meta.provider.getOrElse("parquet")
-
-    // Stage the full rewrite before touching the live table. Reclaim prior
-    // CRASHED runs' staging directories — a crashed run's dir carries a
-    // different name, and deleting only our own would orphan
-    // full-table-size copies forever. Staging names are stamped
-    // `<host>_<pid>` because pid liveness is only checkable LOCALLY: on a
-    // shared filesystem another host's pid space is invisible (its live
-    // pid could read as dead here, deleting an in-flight compaction's only
-    // copy; a recycled pid could read as alive, preserving garbage
-    // forever). So: same-host dirs are reclaimed exactly when their pid is
-    // dead; foreign-host (or unparseable) dirs only once their
-    // modification time is older than `stagingReclaimTtlMs` — past any
-    // plausible compaction runtime, the crashed-not-finished signal that
-    // needs no cross-host pid oracle. Directories that might back a LIVE
-    // run are never touched (concurrent compactions of one table violate
-    // this method's exclusivity contract, but data loss is never an
-    // acceptable way to surface that).
-    val stagingPrefix = s".${table}__compact_"
-    if (fs.exists(loc.getParent)) {
-      val now = System.currentTimeMillis()
-      fs.listStatus(loc.getParent).toSeq
-        .filter(f => f.isDirectory && f.getPath.getName.startsWith(stagingPrefix))
-        .filter { f =>
-          f.getPath.getName.stripPrefix(stagingPrefix).split('_') match {
-            case Array(host, pid) if host == CatalogAutomation.localHost =>
-              !pid.toLongOption.exists(p => ProcessHandle.of(p).isPresent)
-            case _ => // foreign host or legacy/unparseable stamp: TTL only
-              now - f.getModificationTime > stagingReclaimTtlMs
-          }
-        }
-        .foreach(f => fs.delete(f.getPath, true))
-    }
-    // Our own pid is alive, so the sweep above skipped our own name from
-    // any earlier run in this JVM — delete it explicitly.
-    val staging = new Path(loc.getParent,
-      s"$stagingPrefix${CatalogAutomation.localHost}_${ProcessHandle.current().pid()}")
-    fs.delete(staging, true)
-    val tmpFqn = s"${DdlGenerator.quoteIdent(db)}.${DdlGenerator.quoteIdent(table + "__compact")}"
-    spark.sql(s"DROP TABLE IF EXISTS $tmpFqn")
-    val writer = meta.bucketSpec match {
-      case Some(bs) =>
-        // Cluster rows task-per-bucket by repartitioning on the DERIVED
-        // bucket id (`pmod(hash(cols), n)` — functions.hash is the same
-        // murmur3(seed 42) the bucketed writer uses), not on the bucket
-        // columns themselves: the source scan of the bucketed table
-        // claims HashPartitioning(bucketCols, n), which lets the planner
-        // elide a plain `repartition(n, bucketCols)` — and the scan can
-        // then be demoted to plain file splits (DisableUnnecessaryBucketedScan),
-        // leaving each write task with MIXED buckets and one file per
-        // (task, bucket): the rewrite would barely compact. The derived
-        // column defeats the satisfies-match, so the exchange survives
-        // and every bucket lands wholly in one task — ≤ numBuckets files.
-        import org.apache.spark.sql.functions.{hash, lit, pmod}
-        val gb = pmod(hash(bs.bucketColumnNames.map(col): _*), lit(bs.numBuckets))
-        val w = df.withColumn("_graft_compact_bucket", gb)
-          .repartition(bs.numBuckets, col("_graft_compact_bucket"))
-          .drop("_graft_compact_bucket")
-          .write.bucketBy(bs.numBuckets, bs.bucketColumnNames.head,
-            bs.bucketColumnNames.tail: _*)
-        if (bs.sortColumnNames.nonEmpty)
-          w.sortBy(bs.sortColumnNames.head, bs.sortColumnNames.tail: _*)
-        else w
-      case None =>
-        val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        df.coalesce(n).write
-    }
-    writer.format(provider).option("path", staging.toString).saveAsTable(tmpFqn)
-
-    // Swap: both tables are dropped from the catalog (the temp table is
-    // external, so its staged files survive), the staged files take the
-    // original location, and the original identity is re-registered over
-    // them with the original bucket spec (bucket ids ride in the file
-    // names, so the moved files stay bucket-addressable).
-    spark.sql(s"DROP TABLE $tmpFqn")
-    spark.sql(s"DROP TABLE $fqn")
-    fs.delete(loc, true)
-    require(fs.rename(staging, loc), s"rename $staging -> $loc failed")
-    val bucketClause = meta.bucketSpec.map { bs =>
-      val sorted =
-        if (bs.sortColumnNames.isEmpty) ""
-        else s" SORTED BY (${bs.sortColumnNames.map(DdlGenerator.quoteIdent).mkString(", ")})"
-      s"CLUSTERED BY (${bs.bucketColumnNames.map(DdlGenerator.quoteIdent).mkString(", ")})" +
-        s"$sorted INTO ${bs.numBuckets} BUCKETS"
-    }.getOrElse("")
-    spark.sql(s"CREATE TABLE $fqn (${meta.schema.toDDL}) USING $provider " +
-      s"$bucketClause LOCATION '${loc.toString}'")
-    spark.catalog.refreshByPath(loc.toString)
-    spark.catalog.refreshTable(fqn)
-    CompactionResult(before.length, dataFiles().length, bytes)
-  }
-
   private def quotedDb(db: String): String =
     (profile.catalogName.toSeq :+ db).map(DdlGenerator.quoteIdent).mkString(".")
 }
-
-object CatalogAutomation {
-  /** This host's staging-dir stamp: hostname sanitized to name-safe chars
-    * (underscore is the host/pid separator, so it is stripped too). */
-  private[graft] val localHost: String = {
-    val raw = try java.net.InetAddress.getLocalHost.getHostName
-      catch { case _: java.net.UnknownHostException => "localhost" }
-    val safe = raw.replaceAll("[^A-Za-z0-9.-]", "-")
-    if (safe.isEmpty) "localhost" else safe
-  }
-}
-
-/** Outcome of [[CatalogAutomation.compactTable]]: data-file counts around
-  * the rewrite and the bytes scanned. */
-final case class CompactionResult(filesBefore: Int, filesAfter: Int,
-    bytesBefore: Long)

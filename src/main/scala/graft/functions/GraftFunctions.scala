@@ -33,13 +33,6 @@ object GraftFunctions {
         SquaredDistance(children.head, children(1))
       }),
     (
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSketchAgg].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, s"graft_minhash expects 1 argument, got ${children.length}")
-        MinHashSketchAgg(children.head).toAggregateExpression()
-      }),
-    (
       FunctionIdentifier("graft_minhash_sig"),
       new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
       (children: Seq[Expression]) => {
@@ -68,9 +61,6 @@ object GraftFunctions {
 
   /** `graft_cosine(a, b)` as a Column (session must have it registered). */
   def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
-
-  /** `graft_minhash(shingleHash)` aggregate as a Column. */
-  def minhash(shingleHash: Column): Column = call_function("graft_minhash", shingleHash)
 
   /** `graft_minhash_sig(hashArray)` row-local signature as a Column. */
   def minhashSig(hashes: Column): Column = call_function("graft_minhash_sig", hashes)

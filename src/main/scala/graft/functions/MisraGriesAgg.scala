@@ -13,9 +13,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Misra–Gries heavy-hitters sketch (TypedImperativeAggregate — the second
-  * sketch on the §2.11 mutable-buffer rung, next to
-  * [[MinHashSketchAgg]]).
+/** Misra–Gries heavy-hitters sketch (TypedImperativeAggregate — the
+  * §2.11 mutable-buffer rung).
   *
   * Buffer: at most `k` (item → counter) entries. Update is the classic
   * decrement-on-overflow; merge is the mergeable-summaries form (Agarwal

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Attempt-stamped commit ledger for file-backed store tables appended by
+/** Attempt-stamped commit ledger for snapshot-catalog store tables appended by
   * Structured Streaming `foreachBatch` bodies — the exactly-once protocol
   * shared by the MinHash signature store ([[MinHashLsh.appendToStore]])
   * and the IVFADC code store ([[PqAdc.appendToPqStore]]).
@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   *   2. readers see a row iff its (batch_nr, attempt) is in the ledger
   *      ([[IngestLedger.visible]]), so rows of an attempt that died
   *      between the data append and the marker are invisible forever —
-  *      orphan bytes a compaction pass reclaims
-  *      ([[graft.catalog.CatalogAutomation]]), the same contract
-  *      snapshot-based table formats give orphan files.
+  *      the same contract snapshot-based table formats give orphan files.
   *
   * A committed batchId no-ops on re-delivery ([[isCommitted]], checked at
   * the top of each foreachBatch body); a replay of an UNcommitted batch
@@ -33,6 +31,9 @@ import org.apache.spark.sql.functions._
   * read-side filter is a broadcast semi-join that preserves the store
   * side's bucketed output partitioning — committed views join exactly as
   * shuffle-free as the raw tables.
+  *
+  * Ledgers live on the snapshot catalog: `db` is `<cat>.<ns>`, so each
+  * marker append is one manifest commit ([[graft.sources.StoreTables]]).
   */
 final case class IngestLedger(db: String, table: String) {
 
@@ -48,49 +49,24 @@ final case class IngestLedger(db: String, table: String) {
   /** Replay detection keys on (STREAM, batch): a new logical stream over
     * an existing store restarts its batchIds at 0 (fresh checkpoint), and
     * a bare-batchId check would silently skip its first batches as
-    * "replays" of the previous stream's. Ledger tables written before the
-    * stream_id column existed read as the default stream (their one
-    * stream), via the same migration [[commit]] performs. */
+    * "replays" of the previous stream's. */
   def isCommitted(s: SparkSession, batchId: Long,
       streamId: String = IngestLedger.DefaultStream): Boolean =
-    s.catalog.tableExists(fqn) && {
-      val t = s.table(fqn)
-      val withStream =
-        if (t.columns.contains("stream_id"))
-          t.withColumn("stream_id",
-            coalesce(col("stream_id"), lit(IngestLedger.DefaultStream)))
-        else t.withColumn("stream_id", lit(IngestLedger.DefaultStream))
-      !withStream.filter(col("batch_nr") === batchId &&
+    s.catalog.tableExists(fqn) &&
+      !s.table(fqn).filter(col("batch_nr") === batchId &&
         col("stream_id") === streamId).isEmpty
-    }
 
   /** Stamp data rows with the attempt identity they are written under. */
   def stamp(df: DataFrame, batchId: Long, attempt: String): DataFrame =
     df.withColumn("batch_nr", lit(batchId)).withColumn("attempt", lit(attempt))
 
   /** The commit point: append the marker that makes an attempt's rows
-    * visible. Must be the LAST write of the batch body. A ledger table
-    * written before stream_id existed is migrated in place (ADD COLUMNS;
-    * its old rows read NULL → default stream) so existing stores keep
-    * working across the schema change. */
+    * visible. Must be the LAST write of the batch body. */
   def commit(s: SparkSession, batchId: Long, attempt: String,
       streamId: String = IngestLedger.DefaultStream): Unit = {
     import s.implicits._
-    if (s.catalog.tableExists(fqn) &&
-        !s.table(fqn).columns.contains("stream_id")) {
-      s.sql(s"ALTER TABLE $fqn ADD COLUMNS (stream_id STRING)")
-      s.catalog.refreshTable(fqn)
-    }
-    val marker = Seq((batchId, attempt, streamId))
-      .toDF("batch_nr", "attempt", "stream_id")
-    // Production stores live on the snapshot catalog (3-part names): the
-    // marker append is one manifest commit. Session-catalog ledgers (V1
-    // 2-part names — tests, ad-hoc stores) keep the saveAsTable path.
-    if (fqn.count(_ == '.') == 2) graft.sources.StoreTables.append(marker, fqn)
-    else {
-      marker.write.mode("append").saveAsTable(fqn)
-      s.catalog.refreshTable(fqn)
-    }
+    graft.sources.StoreTables.append(
+      Seq((batchId, attempt, streamId)).toDF("batch_nr", "attempt", "stream_id"), fqn)
   }
 
   /** Committed view of a stamped store table registered under `db`. */

@@ -8,15 +8,15 @@ import org.apache.spark.sql.functions._
   * Pipeline (all narrow until the band groupBy):
   *
   *   text ──split──▶ word n-gram shingles ──xxhash64──▶ shingle hashes
-  *        ──per-perm rehash+min──▶ MinHash signature (array<long>, nPerms)
+  *        ──per-perm rehash+min──▶ MinHash signature (array<long>, 64 perms)
   *        ──slice+hash──▶ band hashes ──explode──▶ (band_idx, band_hash, id)
   *        ──self-join on band bucket──▶ candidate pairs
   *        ──exact Jaccard on shingle sets──▶ verified near-dup pairs
   *
-  * Scale design: signatures are computed row-local with codegen'd
-  * higher-order array expressions (no shuffle, no UDF); the only shuffles
-  * are the band-bucket join (keyed on 8-byte hashes, uniformly distributed)
-  * and the final pair dedup. Candidate generation is bucket-local — never
+  * Scale design: signatures are computed row-local by one codegen'd
+  * expression ([[graft.functions.MinHashSignature]], no shuffle, no UDF);
+  * the only shuffles are the band-bucket join (keyed on 8-byte hashes,
+  * uniformly distributed) and the final pair dedup. Candidate generation is bucket-local — never
   * all-pairs — so cost tracks the number of colliding pairs, not N².
   *
   * Per-permutation hashing uses XOR-then-xxhash64 rather than the classic
@@ -26,13 +26,15 @@ import org.apache.spark.sql.functions._
   */
 object MinHashLsh {
 
+  /** Signature width — the kernel's fixed family (64 perms, seed 7). */
+  val NPerms: Int = graft.functions.MinHashKernel.NPerms
+
   final case class Params(
       shingleSize: Int = 2,
-      nPerms: Int = 64,
       bands: Int = 16,
       jaccardThreshold: Double = 0.5) {
-    require(nPerms % bands == 0, s"bands=$bands must divide nPerms=$nPerms")
-    def rowsPerBand: Int = nPerms / bands
+    require(NPerms % bands == 0, s"bands=$bands must divide $NPerms perms")
+    def rowsPerBand: Int = NPerms / bands
   }
 
   /** Distinct word n-gram shingles of a text column (row-local).
@@ -66,29 +68,6 @@ object MinHashLsh {
     array_distinct(grams)
   }
 
-  /** Deterministic per-permutation salts (fixed seed ⇒ every executor and
-    * every run agrees on the signature function). */
-  private def salts(nPerms: Int, seed: Long): Seq[Long] = {
-    val r = new scala.util.Random(seed)
-    Seq.fill(nPerms)(r.nextLong())
-  }
-
-  /** MinHash signature as a per-row expression:
-    * sig(i) = min over shingles of xxhash64(h ⊕ salt_i).
-    *
-    * Kept for ad-hoc column contexts and as the semantics reference; the
-    * pipeline uses [[signatures]]' explode+aggregate form, which computes
-    * the identical function ~10× faster (the nPerms-wide nested lambda here
-    * exceeds what whole-stage codegen handles well).
-    */
-  def signature(shingleArr: Column, nPerms: Int, seed: Long = 7L): Column = {
-    val saltLit = array(salts(nPerms, seed).map(lit): _*)
-    val hashes = transform(shingleArr, s => xxhash64(s))
-    transform(
-      sequence(lit(0), lit(nPerms - 1)),
-      i => array_min(transform(hashes, h => xxhash64(h.bitwiseXOR(element_at(saltLit, i + 1))))))
-  }
-
   /** Band hashes: murmur3 of each r-row slice of the signature. */
   def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
     transform(
@@ -102,42 +81,29 @@ object MinHashLsh {
     when(union > 0, inter / union).otherwise(lit(0.0))
   }
 
-  /** id → (n_shingles, signature) via explode + single-pass aggregation:
-    * one xxhash64 per (shingle, permutation) inside a partial-aggregating
-    * `min` per permutation — map-side combined, fully codegen'd, and linear
-    * at any scale. Produces exactly [[signature]]'s function (parity-tested).
-    *
-    * Documents with zero shingles (empty text) have no signature rows.
-    */
-  def signatures(docs: DataFrame, idCol: String, textCol: String, p: Params,
-      seed: Long = 7L): DataFrame =
+  /** id → (n_shingles, signature) of a text frame ([[signaturesFromShingles]]
+    * over its shingles). Documents with zero shingles (empty text) have no
+    * signature row. */
+  def signatures(docs: DataFrame, idCol: String, textCol: String, p: Params): DataFrame =
     signaturesFromShingles(
       docs.select(col(idCol).as("id"), shingles(col(textCol), p.shingleSize).as("shingles")),
-      p, seed)
+      p)
 
-  /** Signature computation via the ROW-LOCAL sketch expression
-    * ([[graft.functions.MinHashSignature]]): the input frame is one row
-    * per document already, so the previous explode + groupBy("id") paid a
-    * full Exchange and two aggregation passes to fold an array each row
-    * can fold alone. The plan is now Scan → Filter(size>0) → Project —
-    * zero shuffles — with the per-element hashing unchanged
-    * (`transform(shingles, xxhash64)` feeds the same XXH64-seed-42 kernel).
-    * Bit-identical output (parity-tested): the size>0 filter reproduces
-    * the explode form's "zero shingles ⇒ no signature row", and
-    * `size(shingles)` IS the exploded row count (shingles are distinct).
-    */
-  def signaturesSketch(sh: DataFrame, p: Params): DataFrame = {
-    // The SQL-registered expression carries the default family (64 perms,
-    // seed 7); other Params need the relational form.
-    require(p.nPerms == 64, s"graft_minhash_sig is registered with 64 perms, got ${p.nPerms}")
+  /** `(id, n_shingles, sig)` over a prebuilt `(id, shingles)` frame via the
+    * row-local [[graft.functions.MinHashSignature]] kernel: the input is one
+    * row per document already, so the plan is Scan → Filter(size>0) →
+    * Project with zero shuffles. The size>0 filter drops zero-shingle
+    * documents, and `size(shingles)` is the shingle count (shingles are
+    * distinct).
+    *
+    * The filter and the projection both reference `shingles`, and Catalyst
+    * pushes the filter below an unaliased producer projection —
+    * re-evaluating the tokenizer per reference. Pipeline callers pass a
+    * persisted frame (two cache reads); an unpersisted input (n01's direct
+    * call) is pinned here instead of tokenized twice, and stays cached
+    * until the caller clears it ([[nearDupAgainst]]'s cache contract). */
+  def signaturesFromShingles(sh: DataFrame, p: Params): DataFrame = {
     graft.functions.GraftFunctions.register(sh.sparkSession)
-    // The size>0 filter and the projection both reference `shingles`, and
-    // Catalyst pushes the filter below an unaliased producer projection —
-    // re-evaluating the tokenizer per reference (the guide's duplicated-
-    // expression trap). Pipeline callers pass a persisted frame (two cache
-    // reads, fine); a raw expression chain (n01's direct call) is pinned
-    // here instead of re-tokenized twice. Same caller-released cache
-    // contract as [[nearDupAgainst]] documents.
     val pinned =
       if (sh.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         sh.persist()
@@ -150,37 +116,6 @@ object MinHashLsh {
           transform(col("shingles"), s => xxhash64(s))).as("sig"))
   }
 
-  /** Signature aggregation over a prebuilt `(id, shingles)` frame.
-    *
-    * The DEFAULT family (64 perms, seed 7 — every registered operator)
-    * routes through the sketch aggregate: one mutable buffer per group
-    * instead of 64 codegen'd min columns, measured ~15-20% faster at
-    * sf0.1 with ~1 MB smaller task binaries (SigProbe), output
-    * bit-identical (MinHashSketchAggSuite parity). Non-default families
-    * keep the relational form — the SQL-registered sketch carries the
-    * default salts only. */
-  def signaturesFromShingles(sh: DataFrame, p: Params, seed: Long = 7L): DataFrame =
-    if (p.nPerms == 64 && seed == 7L) signaturesSketch(sh, p)
-    else signaturesRelational(sh, p, seed)
-
-  /** The explode + 64-min-columns relational form — the general-family
-    * fallback and the parity reference the sketch is tested against. */
-  private[graft] def signaturesRelational(sh: DataFrame, p: Params,
-      seed: Long = 7L): DataFrame = {
-    val exploded = sh
-      .select(col("id"), explode(col("shingles")).as("s"))
-      .withColumn("h", xxhash64(col("s")))
-    val minCols = salts(p.nPerms, seed).zipWithIndex.map { case (salt, i) =>
-      min(xxhash64(col("h").bitwiseXOR(lit(salt)))).as(s"_sig$i")
-    }
-    exploded
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_shingles"), minCols: _*)
-      .select(
-        col("id"), col("n_shingles"),
-        array((0 until p.nPerms).map(i => col(s"_sig$i")): _*).as("sig"))
-  }
-
   /** `(id, band_idx, band_hash)` LSH bucket keys for a signature frame —
     * the join key surface of both the self-join ([[nearDupPairs]]) and the
     * batch-vs-corpus probe ([[nearDupAgainst]]). */
@@ -191,7 +126,7 @@ object MinHashLsh {
 
   /** Verified near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
     * Candidates come only from shared LSH band buckets. The shingle frame is
-    * persisted: it feeds signature aggregation and both sides of the exact-
+    * persisted: it feeds the signature kernel and both sides of the exact-
     * Jaccard verify, and recomputing the tokenize+shingle scan three times
     * would dominate the pipeline (it did: 42s → ~7s at sf0.1).
     */
@@ -206,26 +141,42 @@ object MinHashLsh {
     // ReuseExchange to share — without the pin each side would recompute
     // the 64-perm kernel. Same caller-released cache contract as `sh`.
     val bands = bandFrame(sigs, p).persist()
-    val candidates = bands.as("x")
-      .join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_hash") === col("y.band_hash") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    val sa = sh.select(col("id").as("id_a"), col("shingles").as("sh_a"))
-    val sb = sh.select(col("id").as("id_b"), col("shingles").as("sh_b"))
+    pairsWithin(sh, bands, p)
+  }
+
+  /** The candidate-and-verify body over caller-built frames: verified
+    * pairs `(id_a < id_b, jaccard)` among the documents of one
+    * `(id, shingles)` frame, candidates from its `(id, band_idx,
+    * band_hash)` frame's shared buckets. Both inputs are read twice, so
+    * callers pass persisted frames and own their release. */
+  def pairsWithin(sh: DataFrame, bands: DataFrame, p: Params): DataFrame =
+    verify(
+      bands.as("x")
+        .join(bands.as("y"),
+          col("x.band_idx") === col("y.band_idx") &&
+            col("x.band_hash") === col("y.band_hash") &&
+            col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+        .distinct(),
+      "id_a", sh, "id_b", sh, p)
+
+  /** Exact-Jaccard verify of distinct candidate pairs `(a, b)`: joins each
+    * side's shingle set and keeps `jaccard ≥ threshold`, as `(a, b,
+    * jaccard)`. */
+  private def verify(candidates: DataFrame, a: String, shA: DataFrame,
+      b: String, shB: DataFrame, p: Params): DataFrame = {
     // Materialize the intersection size as a column so the (expensive)
     // array_intersect runs once per pair, not once each for the numerator
     // and the union denominator.
     val inter = col("_inter").cast("double")
     val union = size(col("sh_a")) + size(col("sh_b")) - col("_inter")
     candidates
-      .join(sa, "id_a").join(sb, "id_b")
+      .join(shA.select(col("id").as(a), col("shingles").as("sh_a")), a)
+      .join(shB.select(col("id").as(b), col("shingles").as("sh_b")), b)
       .withColumn("_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("jaccard", when(union > 0, inter / union).otherwise(lit(0.0)))
       .filter(col("jaccard") >= p.jaccardThreshold)
-      .select("id_a", "id_b", "jaccard")
+      .select(a, b, "jaccard")
   }
 
   /** Incremental-ingest screening: verified near-dup pairs between a NEW
@@ -263,35 +214,20 @@ object MinHashLsh {
       idCol, textCol, p)
   }
 
-  /** The ingest screen against a PRECOMPUTED signature store:
-    * `corpusShingles` is the store's `(id, shingles)` frame and
-    * `corpusBands` its `(id, band_idx, band_hash)` frame, as a store-build
-    * job writes them once ([[signaturesFromShingles]] → [[bandFrame]]).
-    * Only the batch side is tokenized and hashed here — the corpus is
-    * re-read, never re-hashed, which is the marginal-cost contract
-    * [[graft.IngestProbe]] measures. */
   /** Bucket count of the persisted signature store's tables — one
     * definition shared by the batch store build and the streaming append
     * so an appended file can never carry a mismatched bucket spec. */
   val StoreBuckets = 16
 
-  /** Stamp of the one-shot bulk store build ([[graft.queries.NearDup.buildCorpusStore]]). */
-  val BulkBatchNr: Long = IngestLedger.BulkBatchNr
-  val BulkAttempt: String = IngestLedger.BulkAttempt
-
   /** The signature store's commit ledger ([[IngestLedger]] — protocol
     * documented there; shared with the IVFADC store's
     * [[PqAdc.appendToPqStore]]). */
-  private def ledger(storeDb: String): IngestLedger =
+  private[graft] def ledger(storeDb: String): IngestLedger =
     IngestLedger(storeDb, "ingest_commits")
 
   /** The committed `(batch_nr, attempt)` markers of a signature store. */
   def committedBatches(s: org.apache.spark.sql.SparkSession, storeDb: String): DataFrame =
     ledger(storeDb).committed(s)
-
-  private def isCommitted(s: org.apache.spark.sql.SparkSession, storeDb: String,
-      batchId: Long, streamId: String): Boolean =
-    ledger(storeDb).isCommitted(s, batchId, streamId)
 
   /** Restrict a stamped store frame to committed rows ([[IngestLedger.visible]]). */
   def committedOnly(store: DataFrame, commits: DataFrame): DataFrame =
@@ -313,24 +249,20 @@ object MinHashLsh {
     val led = ledger(storeDb)
     // The two table appends are INDEPENDENT jobs (distinct tables, the
     // marker below is the only commit point), so they overlap on a tiny
-    // thread pool: the bands write's signature aggregation back-fills
+    // thread pool: the bands write's signature kernel back-fills
     // executor slots the shingle write's tail leaves idle (optimization
     // guide: overlap independent jobs). Either failure propagates before
     // the marker is written, preserving the attempt protocol.
-    runBoth(
+    runAll(Seq(
       () => graft.sources.StoreTables.append(
         led.stamp(sh, batchId, attempt), s"$storeDb.corpus_shingles",
         bucketSpec = Some((StoreBuckets, "id")), sortOrder = Some("id")),
       () => graft.sources.StoreTables.append(
         led.stamp(bands, batchId, attempt), s"$storeDb.corpus_bands",
         bucketSpec = Some((StoreBuckets, "band_hash")),
-        sortOrder = Some("band_idx, band_hash")))
+        sortOrder = Some("band_idx, band_hash"))))
     led.commit(s, batchId, attempt, streamId)
   }
-
-  /** Run two independent Spark actions concurrently ([[runAll]]). */
-  private[graft] def runBoth(a: () => Unit, b: () => Unit): Unit =
-    runAll(Seq(a, b))
 
   /** Run independent Spark actions concurrently and propagate the first
     * failure after ALL settle (a dangling concurrent write must not
@@ -366,11 +298,6 @@ object MinHashLsh {
     ()
   }
 
-  /** Append the ledger marker that makes an attempt's rows visible. */
-  private[graft] def writeCommit(s: org.apache.spark.sql.SparkSession,
-      storeDb: String, batchId: Long, attempt: String): Unit =
-    ledger(storeDb).commit(s, batchId, attempt)
-
   /** Streaming ingest of the signature store: append ONE micro-batch of
     * documents to existing store tables (the n08 layout — `(id, shingles)`
     * bucketed by id, `(id, band_idx, band_hash)` bucketed by the band
@@ -401,7 +328,7 @@ object MinHashLsh {
       p: Params, streamId: String = IngestLedger.DefaultStream)(
       batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    if (isCommitted(s, storeDb, batchId, streamId)) return
+    if (ledger(storeDb).isCommitted(s, batchId, streamId)) return
     val sh = batch
       .select(col(idCol).as("id"), shingles(col(textCol), p.shingleSize).as("shingles"))
       .persist()
@@ -414,14 +341,14 @@ object MinHashLsh {
     * `(id, band_idx, band_hash)` frames — the one-pass form for callers
     * that already computed the batch's signature pipeline for their own
     * probe (the incremental curation engine probes, self-joins AND
-    * ingests from one shingle frame; re-deriving the 64-perm signatures a
-    * third time here was pure duplicated aggregation). Same idempotency
+    * ingests from one shingle frame, so the 64-perm signatures are
+    * derived once). Same idempotency
     * protocol: a committed batchId no-ops, the ledger marker is the
     * single commit point. */
   def appendPrebuiltToStore(storeDb: String, sh: DataFrame, bands: DataFrame,
       streamId: String = IngestLedger.DefaultStream)(batchId: Long): Unit = {
     val s = sh.sparkSession
-    if (isCommitted(s, storeDb, batchId, streamId)) return
+    if (ledger(storeDb).isCommitted(s, batchId, streamId)) return
     writeAttempt(s, storeDb, sh, bands, batchId, IngestLedger.newAttempt(), streamId)
   }
 
@@ -452,7 +379,7 @@ object MinHashLsh {
       streamId: String = IngestLedger.DefaultStream)(
       batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    if (isCommitted(s, storeDb, batchId, streamId)) return
+    if (ledger(storeDb).isCommitted(s, batchId, streamId)) return
     val attempt = IngestLedger.newAttempt()
     val commits = committedBatches(s, storeDb)
     val sh = batch
@@ -479,45 +406,35 @@ object MinHashLsh {
       pairsTable: String): DataFrame =
     committedOnly(s.table(s"$storeDb.$pairsTable"), committedBatches(s, storeDb))
 
+  /** The ingest screen against a PRECOMPUTED signature store:
+    * `corpusShingles` is the store's `(id, shingles)` frame and
+    * `corpusBands` its `(id, band_idx, band_hash)` frame, as a store-build
+    * job writes them once ([[signaturesFromShingles]] → [[bandFrame]]).
+    * Only the batch side is tokenized and hashed here — the corpus is
+    * re-read, never re-hashed, which is the marginal-cost contract
+    * [[graft.IngestProbe]] measures. */
   def nearDupAgainstStore(batch: DataFrame, corpusShingles: DataFrame,
       corpusBands: DataFrame, idCol: String, textCol: String,
       p: Params = Params()): DataFrame = {
     val shB = batch
       .select(col(idCol).as("id"), shingles(col(textCol), p.shingleSize).as("shingles"))
       .persist()
-    nearDupShinglesAgainstStore(shB, corpusShingles, corpusBands, p)
+    nearDupBandsAgainstStore(shB, bandFrame(signaturesFromShingles(shB, p), p),
+      corpusShingles, corpusBands, p)
   }
-
-  /** [[nearDupAgainstStore]] over a prebuilt (persisted) batch-shingle
-    * frame — the caller owns the frame's lifecycle, so a streaming loop
-    * can share one frame across screen + ingest and release exactly it. */
-  def nearDupShinglesAgainstStore(shB: DataFrame, corpusShingles: DataFrame,
-      corpusBands: DataFrame, p: Params): DataFrame =
-    nearDupBandsAgainstStore(shB,
-      bandFrame(signaturesFromShingles(shB, p), p), corpusShingles,
-      corpusBands, p)
 
   /** The probe over a PREBUILT batch band frame — callers that also
     * self-join or ingest the batch compute the signature pipeline once
-    * and pass it here instead of paying the 64-permutation aggregation
-    * per consumer. */
+    * and pass it here instead of paying the 64-permutation kernel per
+    * consumer. */
   def nearDupBandsAgainstStore(shB: DataFrame, bandsB: DataFrame,
-      corpusShingles: DataFrame, corpusBands: DataFrame, p: Params): DataFrame = {
-    val candidates = bandsB.as("x")
-      .join(corpusBands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_hash") === col("y.band_hash"))
-      .select(col("x.id").as("batch_id"), col("y.id").as("corpus_id"))
-      .distinct()
-    val inter = col("_inter").cast("double")
-    val union = size(col("sh_b")) + size(col("sh_c")) - col("_inter")
-    candidates
-      .join(shB.select(col("id").as("batch_id"), col("shingles").as("sh_b")), "batch_id")
-      .join(corpusShingles.select(col("id").as("corpus_id"), col("shingles").as("sh_c")),
-        "corpus_id")
-      .withColumn("_inter", size(array_intersect(col("sh_b"), col("sh_c"))))
-      .withColumn("jaccard", when(union > 0, inter / union).otherwise(lit(0.0)))
-      .filter(col("jaccard") >= p.jaccardThreshold)
-      .select("batch_id", "corpus_id", "jaccard")
-  }
+      corpusShingles: DataFrame, corpusBands: DataFrame, p: Params): DataFrame =
+    verify(
+      bandsB.as("x")
+        .join(corpusBands.as("y"),
+          col("x.band_idx") === col("y.band_idx") &&
+            col("x.band_hash") === col("y.band_hash"))
+        .select(col("x.id").as("batch_id"), col("y.id").as("corpus_id"))
+        .distinct(),
+      "batch_id", shB, "corpus_id", corpusShingles, p)
 }

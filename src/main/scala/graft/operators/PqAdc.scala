@@ -264,7 +264,7 @@ object PqAdc {
       // encode's runtime. Each append is one snapshot-catalog manifest
       // commit ([[graft.sources.StoreTables]]) — no listing/committer
       // fixed cost, and no per-session FileStatusCache to refresh.
-      MinHashLsh.runBoth(
+      MinHashLsh.runAll(Seq(
         () => graft.sources.StoreTables.append(
           led.stamp(encodeAssigned(b, centroids, m), batchId, attempt),
           s"$storeDb.pq_codes",
@@ -272,7 +272,7 @@ object PqAdc {
           sortOrder = Some("cell_id")),
         () => graft.sources.StoreTables.append(
           led.stamp(cellDrift(b, centroids), batchId, attempt),
-          s"$storeDb.pq_drift"))
+          s"$storeDb.pq_drift")))
       led.commit(s, batchId, attempt, streamId)
     } finally b.unpersist()
   }

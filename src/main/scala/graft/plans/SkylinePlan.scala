@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.DoubleType
   * [[graft.functions.GraftExtensions]] (mirroring how the reference wires
   * `IcebergSparkSessionExtensions`, `create_iceberg_tables.py:127`).
   *
-  * Semantics are identical to [[graft.operators.Skyline]] (the composed
-  * `mapPartitions` form, kept as the semantics reference and parity-tested):
+  * Semantics are identical to the composed `mapPartitions` form
+  * (`graft.operators.Skyline`, kept in the test tree as the semantics
+  * reference SkylinePlanSuite checks parity against):
   * a row is on the skyline iff no other row is ≥ on every dimension and > on
   * at least one; rows with NULL/NaN dimensions are excluded up front.
   *
@@ -167,7 +168,7 @@ object SkylinePlan {
   }
 
   /** Skyline of `df` maximizing the given DOUBLE columns (negate a column to
-    * minimize). Plan-integrated form of [[graft.operators.Skyline.skyline]]. */
+    * minimize). */
   def skyline(df: DataFrame, dims: Seq[String]): DataFrame = {
     require(dims.nonEmpty, "at least one skyline dimension required")
     dims.foreach { d =>

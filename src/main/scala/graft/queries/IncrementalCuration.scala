@@ -41,7 +41,7 @@ import graft.sources.{SnapshotStore, SnapshotUpsert}
   *
   * Scale shape per trigger, honestly:
   *   - near_dup_drop / row-local / temperature_mix: text CPU (tokenize,
-  *     shingle, 128-perm MinHash) is strictly O(batch); the residual
+  *     shingle, 64-perm MinHash) is strictly O(batch); the residual
   *     linear terms are scans of compact state (store bands, 3-column
   *     gated rows). [[graft.CurationProbe]] measures this shape:
   *     full-refresh wall grows ~2.3× across a 16× mirror growth while
@@ -224,31 +224,6 @@ final class IncrementalCuration(spark: SparkSession, spec: PipelineSpec,
       s.table(raw).join(ids.select("doc_id"), Seq("doc_id"), "left_semi")
   }
 
-  /** Intra-batch verified near-dup pairs from prebuilt shingle + band
-    * frames — [[MinHashLsh.nearDupPairs]]'s body over caller-owned frames
-    * (no hidden persist to leak per trigger, and the caller's one
-    * signature pipeline serves this self-join, the store probe and the
-    * ingest). */
-  private def pairsWithin(sh: DataFrame, bands: DataFrame,
-      p: MinHashLsh.Params): DataFrame = {
-    val candidates = bands.as("x")
-      .join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_hash") === col("y.band_hash") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    val sa = sh.select(col("id").as("id_a"), col("shingles").as("sh_a"))
-    val sb = sh.select(col("id").as("id_b"), col("shingles").as("sh_b"))
-    val inter = col("_inter").cast("double")
-    val union = size(col("sh_a")) + size(col("sh_b")) - col("_inter")
-    candidates.join(sa, "id_a").join(sb, "id_b")
-      .withColumn("_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", when(union > 0, inter / union).otherwise(lit(0.0)))
-      .filter(col("jaccard") >= p.jaccardThreshold)
-      .select("id_a", "id_b")
-  }
-
   private def storeTableOr(name: String, empty: => DataFrame): DataFrame =
     if (s.catalog.tableExists(s"$storeDb.$name")) s.table(s"$storeDb.$name")
     else empty
@@ -318,15 +293,14 @@ final class IncrementalCuration(spark: SparkSession, spec: PipelineSpec,
                 .withColumn("attempt", lit(""))), commits)
           val storeBands = MinHashLsh.committedOnly(
             storeTableOr("corpus_bands",
-              MinHashLsh.bandFrame(
-                MinHashLsh.signaturesFromShingles(shB.limit(0), P), P)
+              bandsB.limit(0)
                 .withColumn("batch_nr", lit(0L))
                 .withColumn("attempt", lit(""))), commits)
           val cross = MinHashLsh.nearDupBandsAgainstStore(
             shB, bandsB, storeSh, storeBands, P)
             .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
           phase("neardup:intra")
-          val intra = pairsWithin(shB, bandsB, P)
+          val intra = MinHashLsh.pairsWithin(shB, bandsB, P).select("id_a", "id_b")
           phase("neardup:prevcc")
           val prevCC = chk(preEpochView(ccT, s"$base:cc", epochId))
           val prevEdges = prevCC.filter(col("id") =!= col("root"))
@@ -404,14 +378,14 @@ final class IncrementalCuration(spark: SparkSession, spec: PipelineSpec,
         // between them replays exactly as it did sequentially.
         plan.spanCap match {
           case None =>
-            MinHashLsh.runBoth(
+            MinHashLsh.runAll(Seq(
               () => SnapshotUpsert.replaceByKey(gramstatT,
                 changed.filter(col("new_n") > 0)
                   .select(col("gram"), col("new_n").as("n_docs")),
                 changed.select("gram"), Seq("gram"), s"$base:gramstat", epochId),
               () => SnapshotUpsert.replaceByKey(gramsT, addPairs,
                 keptRemovedIds.select("doc_id"), Seq("doc_id"),
-                s"$base:grams", epochId))
+                s"$base:grams", epochId)))
           case Some(cap) =>
             // STICKY saturation: a gram that ever reaches the cap stops
             // carrying pairs forever — resuming after the count drops
@@ -429,7 +403,7 @@ final class IncrementalCuration(spark: SparkSession, spec: PipelineSpec,
             val satGrams = chk(preStat.filter(col("sat")).select("gram")
               .unionByName(changed.filter(col("new_n") >= cap).select("gram"))
               .distinct())
-            MinHashLsh.runBoth(
+            MinHashLsh.runAll(Seq(
               () => SnapshotUpsert.replaceByKey(gramstatT,
                 changed.filter(col("new_n") > 0)
                   .select(col("gram"), col("new_n").as("n_docs"),
@@ -438,7 +412,7 @@ final class IncrementalCuration(spark: SparkSession, spec: PipelineSpec,
               () => SnapshotUpsert.replaceByKey(gramsT,
                 addPairs.join(broadcast(satGrams), Seq("gram"), "left_anti"),
                 keptRemovedIds.select("doc_id"), Seq("doc_id"),
-                s"$base:grams", epochId))
+                s"$base:grams", epochId)))
             // Evict the NEWLY saturated grams' previously tracked pairs.
             val newlySat = chk(changed
               .filter(!col("pre_sat") && col("new_n") >= cap)
@@ -535,9 +509,9 @@ final class IncrementalCuration(spark: SparkSession, spec: PipelineSpec,
         // trigger's watermark read, so the two writes are independent
         // and overlap (guide §2.6). A crash between them replays
         // convergently: asOf < vGated still holds and both rewrite.
-        MinHashLsh.runBoth(
+        MinHashLsh.runAll(Seq(
           () => newAgg.writeTo(aggT).overwrite(lit(true)),
-          () => publish(newAgg))
+          () => publish(newAgg)))
       } else publish(s.table(aggT))
     }
     phase("maintain")

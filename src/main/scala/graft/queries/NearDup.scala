@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{MinHashLsh, SimHash}
+import graft.operators.{IngestLedger, MinHashLsh, SimHash}
 
 /** Near-duplicate detection over `documents` — SURVEY.md §2.12.
   *
@@ -12,7 +12,7 @@ import graft.operators.{MinHashLsh, SimHash}
 object NearDup {
 
   private[queries] val P = MinHashLsh.Params(
-    shingleSize = 2, nPerms = 64, bands = 16, jaccardThreshold = 0.5)
+    shingleSize = 2, bands = 16, jaccardThreshold = 0.5)
 
   /** Shared oracle CTE chain over `documents`: brute-force bigram Jaccard
     * pairs (≥ 0.5) → undirected edges → recursive min-label reach. ONE
@@ -62,9 +62,9 @@ object NearDup {
   val n01MinhashSignatures = Q(
     "n01_minhash_signatures",
     (s, dir) => {
-      // Exercised through the TypedImperativeAggregate sketch path —
-      // bit-identical to the relational form (MinHashSketchAggSuite).
-      MinHashLsh.signaturesSketch(
+      // The row-local graft_minhash_sig kernel — bit-identical to the
+      // relational test twin (MinHashTwin).
+      MinHashLsh.signaturesFromShingles(
         Tables.documents(s, dir).select(
           col("doc_id").as("id"),
           MinHashLsh.shingles(col("text"), P.shingleSize).as("shingles")),
@@ -296,18 +296,18 @@ object NearDup {
     // appends (MinHashLsh.appendToStore, by-name schema match) can land in
     // the same tables, and committed-view readers see the bulk build.
     def stamp(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      df.withColumn("batch_nr", lit(MinHashLsh.BulkBatchNr))
-        .withColumn("attempt", lit(MinHashLsh.BulkAttempt))
+      df.withColumn("batch_nr", lit(IngestLedger.BulkBatchNr))
+        .withColumn("attempt", lit(IngestLedger.BulkAttempt))
     val sh = corpus
       .select(col("doc_id").as("id"),
         MinHashLsh.shingles(col("text"), P.shingleSize).as("shingles"))
       .persist()
     try {
       // Independent table writes overlap on two driver threads (guide
-      // §2.6): the bands build's signature aggregation back-fills slots
+      // §2.6): the bands build's signature kernel back-fills slots
       // the shingle write's tail frees. The ledger marker still lands
       // strictly after BOTH (the single commit point).
-      MinHashLsh.runBoth(
+      MinHashLsh.runAll(Seq(
         () => graft.sources.StoreTables.replace(
           stamp(sh), s"$storeDb.corpus_shingles",
           bucketSpec = Some((MinHashLsh.StoreBuckets, "id")),
@@ -316,8 +316,8 @@ object NearDup {
           stamp(MinHashLsh.bandFrame(MinHashLsh.signaturesFromShingles(sh, P), P)),
           s"$storeDb.corpus_bands",
           bucketSpec = Some((MinHashLsh.StoreBuckets, "band_hash")),
-          sortOrder = Some("band_idx, band_hash")))
-      MinHashLsh.writeCommit(s, storeDb, MinHashLsh.BulkBatchNr, MinHashLsh.BulkAttempt)
+          sortOrder = Some("band_idx, band_hash"))))
+      MinHashLsh.ledger(storeDb).commit(s, IngestLedger.BulkBatchNr, IngestLedger.BulkAttempt)
     } finally sh.unpersist()
   }
 

@@ -273,16 +273,17 @@ final class PipelineRunner(spark: SparkSession) {
       // scale-honest step for a changes-driven spec: each batch screens
       // against everything already ingested in O(batch) work.
       requireCols(df, step, "doc_id", "text")
-      // Build the shingle frame UNPERSISTED: the returned pipeline frame is
-      // lazy, so nothing could safely own a persist's release here — the
-      // per-trigger caller re-shingles instead of leaking one cached frame
-      // per invocation (the convenience wrapper persists for callers that
-      // probe AND ingest from one frame).
+      // The returned pipeline frame is lazy, so nothing here could own a
+      // persist's release. signaturesFromShingles still pins the
+      // unpersisted shingle frame (see its doc), so each invocation leaves
+      // one cached frame until the session's cache is cleared.
       val shB = df.select(col("doc_id").as("id"),
         graft.operators.MinHashLsh.shingles(col("text"),
           NearDup.P.shingleSize).as("shingles"))
-      val dupes = graft.operators.MinHashLsh.nearDupShinglesAgainstStore(
+      val dupes = graft.operators.MinHashLsh.nearDupBandsAgainstStore(
           shB,
+          graft.operators.MinHashLsh.bandFrame(
+            graft.operators.MinHashLsh.signaturesFromShingles(shB, NearDup.P), NearDup.P),
           spark.table(s"${NearDup.storeDb}.corpus_shingles"),
           spark.table(s"${NearDup.storeDb}.corpus_bands"),
           NearDup.P)

@@ -752,8 +752,8 @@ object Relational {
   /** Skyline: parts Pareto-optimal on (max size, min price) — the
     * dominance operator from the skyline-on-Spark literature, run through
     * the plan-integrated form ([[graft.plans.SkylinePlan]]: custom
-    * LogicalPlan + strategy + pruning rule; the composed
-    * [[graft.operators.Skyline]] is its parity-tested twin); oracle is the
+    * LogicalPlan + strategy + pruning rule; a composed two-phase form in
+    * the test tree is its parity-tested twin); oracle is the
     * quadratic NOT EXISTS dominance predicate. */
   val q29Skyline = Q(
     "q29_skyline",

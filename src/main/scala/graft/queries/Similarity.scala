@@ -639,13 +639,13 @@ object Similarity {
     // The centroid (model-sized) and assignment writes are independent
     // jobs targeting distinct tables — overlap them (guide §2.6) so the
     // tiny centroid write hides inside the assignment job's runtime.
-    graft.operators.MinHashLsh.runBoth(
+    graft.operators.MinHashLsh.runAll(Seq(
       () => graft.sources.StoreTables.replace(
         centroids, s"${NearDup.storeDb}.ivf_centroids"),
       () => graft.sources.StoreTables.replace(
         graft.operators.IvfAnn.assignTwoLevel(c, centroids, coarseProbe),
         s"${NearDup.storeDb}.ivf_assign",
-        bucketSpec = Some((16, "cell_id")), sortOrder = Some("cell_id")))
+        bucketSpec = Some((16, "cell_id")), sortOrder = Some("cell_id"))))
   }
 
   /** e10's two-level IVF search against a PERSISTED index — the last

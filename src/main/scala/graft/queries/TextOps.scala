@@ -576,10 +576,13 @@ object TextOps {
     * where the unique-owner table falls out of the df aggregate itself
     * (min(doc_id) of a df=1 group IS the owner). Cost is linear in shingle
     * volume and the only join is on ~|docs| rows; no pairwise document work
-    * anywhere (contrast d10's containment join). At 100 TB the shingle
-    * strings would be xxhash64-compressed before the shuffle (collision-
-    * free in expectation at 2⁶⁴); kept raw here so the oracle is
-    * string-exact. */
+    * anywhere (contrast d10's containment join). The document-frequency
+    * aggregate groups on `xxhash64(shingle)`, not the string, so the
+    * shuffle carries 8-byte keys. Each pair of distinct grams collides
+    * with probability 2⁻⁶⁴; a collision merges two grams' counts and marks
+    * both as repeated. That is negligible on the fixtures but becomes
+    * likely (birthday bound) at billions of distinct grams, where the
+    * result is no longer string-exact. */
   /** The d14 pipeline body over an arbitrary `(doc_id, text)` frame —
     * shared with [[graft.ScaleProbe]] so the scaling probe times exactly
     * the registered plan. */

@@ -28,15 +28,6 @@ object GraftPlanBridge {
   /** The Catalyst expression behind a Column. */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Catalog metadata of a registered table (`sessionState` is
-    * `private[sql]`): schema, provider, location, bucket spec — what a
-    * maintenance operation (compaction) needs to rewrite a table's files
-    * without changing its logical layout. */
-  def tableMetadata(spark: SparkSession, db: String, table: String)
-      : org.apache.spark.sql.catalyst.catalog.CatalogTable =
-    spark.asInstanceOf[classic.SparkSession].sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
-
   /** Block until every queued listener-bus event has been delivered
     * (`listenerBus` is `private[spark]`). For measurement harnesses that
     * attribute task metrics to the job that just ran: a fixed sleep bounds

@@ -1,11 +1,14 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.operators.MinHashLsh
+import graft.operators.{MinHashLsh, MinHashTwin}
 
+/** The row-local `graft_minhash_sig` kernel against the relational test
+  * twin ([[MinHashTwin]]). */
 class MinHashSketchAggSuite extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -16,43 +19,28 @@ class MinHashSketchAggSuite extends AnyFunSuite {
     (3L, "a b"),
     (4L, "singletoken")).toDF("doc_id", "text")
 
-  test("sketch aggregate equals the relational 64-min-column signatures bit-for-bit") {
-    GraftFunctions.register(spark)
-    val p = MinHashLsh.Params()
-    // The explicit relational reference: the public entry now ROUTES the
-    // default family through the sketch, so the parity claim must compare
-    // against the 64-min-column form directly.
-    val relational = MinHashLsh.signaturesRelational(
-        docs.select(col("doc_id").as("id"),
-          MinHashLsh.shingles(col("text"), p.shingleSize).as("shingles")), p)
+  private def twin(sh: DataFrame): Map[Long, Seq[Long]] =
+    MinHashTwin.signaturesRelational(sh)
       .select("id", "sig").as[(Long, Seq[Long])].collect().toMap
-    val sketch = docs
-      .select(col("doc_id").as("id"),
-        explode(MinHashLsh.shingles(col("text"), p.shingleSize)).as("s"))
-      .groupBy("id")
-      .agg(GraftFunctions.minhash(xxhash64(col("s"))).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(sketch === relational)
-  }
 
   test("merge across partitions gives the same signature as single-partition") {
     GraftFunctions.register(spark)
-    val exploded = docs
-      .select(col("doc_id").as("id"),
-        explode(MinHashLsh.shingles(col("text"), 2)).as("s"))
+    // graft_minhash_sig over a collect_list of shingle hashes: the
+    // per-group SQL form, whatever partitioning feeds the collect.
+    val sh = docs.select(col("doc_id").as("id"),
+      MinHashLsh.shingles(col("text"), 2).as("shingles"))
+    val hashes = sh.select(col("id"), explode(col("shingles")).as("s"))
       .withColumn("h", xxhash64(col("s")))
-    val one = exploded.repartition(1).groupBy("id")
-      .agg(GraftFunctions.minhash(col("h")).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val many = exploded.repartition(7).groupBy("id")
-      .agg(GraftFunctions.minhash(col("h")).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(one === many)
+    def viaCollect(partitions: Int): Map[Long, Seq[Long]] =
+      hashes.repartition(partitions).groupBy("id")
+        .agg(GraftFunctions.minhashSig(collect_list(col("h"))).as("sig"))
+        .as[(Long, Seq[Long])].collect().toMap
+    assert(viaCollect(1) === twin(sh))
+    assert(viaCollect(7) === twin(sh))
   }
 
   test("row-local signature expression equals the relational form bit-for-bit, " +
       "drops zero-shingle docs, and plans with zero Exchange") {
-    GraftFunctions.register(spark)
     val p = MinHashLsh.Params()
     // "" shingles to nothing (single empty token, bigram window empty):
     // the relational explode emits NO row for it and the row-local filter
@@ -60,27 +48,26 @@ class MinHashSketchAggSuite extends AnyFunSuite {
     val withEmpty = docs.union(Seq((5L, "")).toDF("doc_id", "text"))
     val sh = withEmpty.select(col("doc_id").as("id"),
       MinHashLsh.shingles(col("text"), p.shingleSize).as("shingles"))
-    val relational = MinHashLsh.signaturesRelational(sh, p)
+    val relational = MinHashTwin.signaturesRelational(sh)
       .as[(Long, Long, Seq[Long])].collect().sortBy(_._1)
-    val rowLocal = MinHashLsh.signaturesSketch(sh, p)
+    val rowLocal = MinHashLsh.signaturesFromShingles(sh, p)
       .as[(Long, Long, Seq[Long])].collect().sortBy(_._1)
     assert(rowLocal === relational)
     assert(!rowLocal.map(_._1).contains(5L))
-    val plan = MinHashLsh.signaturesSketch(sh, p)
+    // The same kernel through its SQL registration: the twin's signature
+    // for every document with shingles, NULL for an empty shingle array
+    // ("singletoken" and "").
+    GraftFunctions.register(spark)
+    sh.createOrReplaceTempView("mh_shingles")
+    val viaSql = spark.sql(
+      """SELECT id, graft_minhash_sig(transform(shingles, s -> xxhash64(s))) AS sig
+         FROM mh_shingles""")
+      .as[(Long, Option[Seq[Long]])].collect().toMap
+    assert(viaSql.collect { case (id, None) => id }.toSet === Set(4L, 5L),
+      "an empty shingle array must give NULL")
+    assert(viaSql.collect { case (id, Some(sig)) => id -> sig } === twin(sh))
+    val plan = MinHashLsh.signaturesFromShingles(sh, p)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"row-local signatures must not shuffle:\n$plan")
-  }
-
-  test("works through SQL after registration; empty group gives NULL") {
-    GraftFunctions.register(spark)
-    docs.createOrReplaceTempView("mh_docs")
-    val viaSql = spark.sql(
-      """SELECT doc_id, graft_minhash(xxhash64(s)) AS sig
-         FROM (SELECT doc_id, explode(split(lower(text), ' ')) AS s FROM mh_docs)
-         GROUP BY doc_id""")
-    assert(viaSql.count() === 4)
-    val empty = spark.sql(
-      "SELECT graft_minhash(xxhash64(s)) FROM (SELECT 1L AS s WHERE false)")
-    assert(empty.head.isNullAt(0))
   }
 }

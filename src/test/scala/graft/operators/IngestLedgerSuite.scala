@@ -12,7 +12,7 @@ class IngestLedgerSuite extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("isCommitted is per (stream, batch); visibility stays per attempt") {
-    val led = IngestLedger("default", s"ledger_test_${System.nanoTime()}")
+    val led = IngestLedger("graft_snap.ledger_test", s"ledger_${System.nanoTime()}")
     assert(!led.isCommitted(spark, 0L, "s1"))
     led.commit(spark, 0L, "a1", streamId = "s1")
     assert(led.isCommitted(spark, 0L, "s1"))
@@ -27,26 +27,5 @@ class IngestLedgerSuite extends AnyFunSuite {
     val visible = IngestLedger.visible(store, led.committed(spark))
       .select("payload").as[Int].collect().toSet
     assert(visible === Set(1, 2), "dead attempt's rows must stay invisible")
-  }
-
-  test("a legacy ledger table (no stream_id column) migrates in place: " +
-    "old rows read as the default stream, new commits append") {
-    import spark.implicits._
-    val led = IngestLedger("default", s"ledger_legacy_${System.nanoTime()}")
-    // A store built before the stream_id column existed.
-    Seq((0L, "old_a")).toDF("batch_nr", "attempt")
-      .write.saveAsTable(led.fqn)
-    // The legacy batch reads as committed under the default stream...
-    assert(led.isCommitted(spark, 0L))
-    assert(!led.isCommitted(spark, 0L, "s2"))
-    // ...and a new commit migrates the table (ADD COLUMNS) and appends.
-    led.commit(spark, 1L, "new_b", streamId = "s2")
-    assert(led.isCommitted(spark, 1L, "s2"))
-    assert(led.isCommitted(spark, 0L), "legacy marker must survive migration")
-    // Visibility still joins on (batch_nr, attempt) for both generations.
-    val store = Seq((0L, "old_a", 1), (1L, "new_b", 2), (1L, "dead", 3))
-      .toDF("batch_nr", "attempt", "payload")
-    assert(IngestLedger.visible(store, led.committed(spark))
-      .select("payload").as[Int].collect().toSet === Set(1, 2))
   }
 }

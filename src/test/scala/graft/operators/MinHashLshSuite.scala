@@ -59,7 +59,7 @@ class MinHashLshSuite extends AnyFunSuite {
     val s2 = MinHashLsh.signatures(docs, "doc_id", "text", p)
       .select("id", "sig").as[(Long, Seq[Long])].collect().toMap
     assert(s1 === s2)
-    assert(s1(1L).length === p.nPerms)
+    assert(s1(1L).length === MinHashLsh.NPerms)
   }
 
   test("identical texts share the full signature; jaccard = 1.0") {
@@ -74,21 +74,24 @@ class MinHashLshSuite extends AnyFunSuite {
     val sigs = MinHashLsh.signatures(docs, "doc_id", "text", p)
       .select("id", "sig").as[(Long, Seq[Long])].collect().toMap
     def est(a: Long, b: Long): Double =
-      sigs(a).zip(sigs(b)).count { case (x, y) => x == y }.toDouble / p.nPerms
+      sigs(a).zip(sigs(b)).count { case (x, y) => x == y }.toDouble / MinHashLsh.NPerms
     assert(est(1L, 2L) > 0.7, s"near-dup estimate ${est(1L, 2L)}")
     assert(est(1L, 3L) < 0.2, s"unrelated estimate ${est(1L, 3L)}")
   }
 
   test("relational signatures equal the per-row expression form") {
+    // On the fixture documents: the production row-local kernel against
+    // the relational test twin, bit for bit.
     val p = MinHashLsh.Params()
-    val rel = MinHashLsh.signatures(docs, "doc_id", "text", p)
-      .select("id", "sig").as[(Long, Seq[Long])].collect().toMap
-    val expr = docs
-      .select(
-        col("doc_id"),
-        MinHashLsh.signature(MinHashLsh.shingles(col("text"), p.shingleSize), p.nPerms))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(rel === expr)
+    val sh = graft.queries.Tables.documents(spark, graft.SparkTestSession.sfDir)
+      .select(col("doc_id").as("id"),
+        MinHashLsh.shingles(col("text"), p.shingleSize).as("shingles"))
+    val rel = MinHashTwin.signaturesRelational(sh)
+      .select("id", "n_shingles", "sig").as[(Long, Long, Seq[Long])].collect().toSet
+    val kernel = MinHashLsh.signaturesFromShingles(sh, p)
+      .select("id", "n_shingles", "sig").as[(Long, Long, Seq[Long])].collect().toSet
+    assert(rel.nonEmpty)
+    assert(kernel === rel)
   }
 
   test("shingles are distinct word n-grams") {

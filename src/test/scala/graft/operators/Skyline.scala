@@ -2,10 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 
-/** Distributed skyline (Pareto-dominance) operator — a query form Spark
-  * lacks natively; pattern after the skyline-on-Spark literature
-  * (e.g. "Integration of Skyline Queries into Spark SQL", EDBT 2023 —
-  * referenced in PAPERS.md).
+/** Distributed skyline (Pareto-dominance) operator composed from
+  * DataFrame `mapPartitions` passes — the reference twin the
+  * plan-integrated [[graft.plans.SkylinePlan]] (which q29 runs) is checked
+  * against in SkylinePlanSuite. Pattern after the skyline-on-Spark
+  * literature (e.g. "Integration of Skyline Queries into Spark SQL",
+  * EDBT 2023 — referenced in PAPERS.md).
   *
   * A row is on the skyline iff no other row is ≥ on every dimension and
   * > on at least one (all dimensions maximized; negate a column to
